@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.engine.Tables
+import graft.engine.{Frames, Tables}
 import graft.functions.VectorFunctions
 
 /** User-facing facade: register the warehouse and query it by name or
@@ -41,10 +41,10 @@ object Graft {
         s"unknown operator '$name'; known: ${operators.mkString(", ")}"))(spark, dir)
 
   /** Return this session's operator-pinned storage (memoized pair
-    * streams, scored frames, shingle caches) to baseline — call between
-    * report batches in a long-lived session. Frames returned by earlier
+    * streams, scored frames, iteration checkpoints, shingle caches) to
+    * baseline — call between report batches in a long-lived session.
+    * Inputs are immutable between releases. Frames returned by earlier
     * `run` calls must not be reused afterwards; re-running the operator
     * rebuilds them. */
-  def release(spark: SparkSession): Unit =
-    graft.operators.Lifecycle.release(spark)
+  def release(spark: SparkSession): Unit = Frames.release(spark)
 }

@@ -8,6 +8,10 @@ import org.apache.spark.sql.functions._
   * All loaders are plain `spark.read.parquet` scans so Catalyst keeps
   * full pushdown/pruning freedom — callers `.select`/`.filter` and the
   * parquet source sees `PushedFilters`/`ReadSchema` accordingly.
+  *
+  * An input is immutable between releases: a session may cache facts
+  * about a table (its scan width, frames pinned by [[Frames]]) until
+  * `Graft.release`, so rewrite a table only between releases.
   */
 object Tables {
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -28,9 +32,10 @@ object Tables {
   /** Scan partition count per (session, input file), computed once: the
     * `.rdd.getNumPartitions` probe triggers file listing + physical
     * planning, and the loaders run on every operator build — dozens of
-    * times per query. The width of an immutable input file never
-    * changes within a session, so cache the probe (stopped sessions are
-    * evicted so the map cannot pin SparkContexts across runs). */
+    * times per query. Inputs are immutable between releases, so the
+    * probe holds until [[Frames.release]] forgets the session's entries
+    * (stopped sessions are evicted so the map cannot pin SparkContexts
+    * across runs). */
   private val scanWidth =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
   private def scanParts(spark: SparkSession, df: => DataFrame, key: String): Int = {
@@ -39,6 +44,13 @@ object Tables {
     }
     scanWidth.getOrElseUpdate((spark, key), df.rdd.getNumPartitions)
   }
+
+  private[engine] def forget(spark: SparkSession): Unit =
+    scanWidth.keysIterator.foreach(k => if (k._1 eq spark) scanWidth.remove(k))
+
+  /** The cached scan width of `path`, if this session has probed it. */
+  private[engine] def probedWidth(spark: SparkSession, path: String): Option[Int] =
+    scanWidth.get((spark, path))
 
   private def spreadIfNarrow(spark: SparkSession, df: DataFrame, key: String): DataFrame = {
     val target = spark.sparkContext.defaultParallelism

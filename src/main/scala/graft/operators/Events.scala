@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{Qf, Tables}
+import graft.engine.{Frames, Qf, Tables}
 import graft.engine.Qf._
 
 /** Event analytics (SURVEY.md §2.2): the KSE pipeline's query surface in
@@ -2932,7 +2932,7 @@ object Events {
       |FROM m""".stripMargin
 
   // ---------------------------------------------------------------- e76
-  /** Lifecycle census at the data horizon: every user classified as
+  /** User-lifecycle census at the data horizon: every user classified as
     * new (first seen in the final 30 days), churned (silent for > 30
     * days), or active — the end-state snapshot behind e28's weekly
     * growth-accounting series. One map-combinable min/max pass per
@@ -4321,7 +4321,7 @@ object Events {
       .withColumn("row_n", sum(col("n")).over(Window.partitionBy("event_type")))
       .select(col("event_type").as("i"), col("next_type").as("j"),
         (dbl(col("n")) / dbl(col("row_n"))).as("p"))
-      .transform(d => Memo.tracked(spark, d.localCheckpoint()))
+      .transform(Frames.checkpoint(spark, _))
     val nTypes = Tables.events(spark, dir).select("event_type").distinct()
     val v0 = nTypes.crossJoin(broadcast(
         nTypes.agg(count(lit(1)).as("k"))))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.engine.Frames
 
 /** foreachBatch idempotent-upsert sink pattern.
   *
@@ -61,10 +62,14 @@ object ForeachBatchUpsert {
         dedupeLatest(incoming.unionByName(existing), keyCol, versionCol)
       } else incoming
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    // materialize the merge before overwriting the files it was read from
-    merged.localCheckpoint(true).write
+    // materialize the merge before overwriting the files it was read
+    // from; unregistered (a concurrent release must not free it mid-write)
+    // and freed once written, so a long-running stream pins nothing
+    val frozen = merged.localCheckpoint(true)
+    try frozen.write
       .mode("overwrite")
       .partitionBy("key_bucket")
       .parquet(targetDir)
+    finally Frames.drop(frozen)
   }
 }

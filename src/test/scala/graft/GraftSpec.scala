@@ -39,6 +39,8 @@ class GraftSpec extends SparkSpec {
     // against a warehouse dir — not just key-set consistency (which the
     // dispatch test pins) but an actual run. sf0.001 keeps the full
     // sweep cheap; Verify covers value correctness separately.
+    Graft.release(spark) // other suites' leftovers are not this sweep's
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
     val failures = Graft.operators.flatMap { name =>
       try { Graft.run(spark, sf, name).count(); None }
       catch { case e: Throwable =>
@@ -47,6 +49,9 @@ class GraftSpec extends SparkSpec {
     }
     assert(failures.isEmpty,
       s"${failures.size} operators failed via the facade:\n${failures.mkString("\n")}")
-    graft.operators.Lifecycle.release(spark) // don't pin the whole sweep's frames
+    // and the whole sweep's pinned storage returns to baseline
+    Graft.release(spark)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(baseline)
+    assert(leaked.isEmpty, s"${leaked.size} RDDs still pinned after release")
   }
 }

@@ -38,6 +38,16 @@ class ForeachBatchUpsertSpec extends SparkSpec {
     assert(result.toSeq == Seq((1L, 1L, "a"), (2L, 2L, "b2"), (3L, 1L, "c")))
   }
 
+  test("the handler pins no storage across micro-batches") {
+    val dir = Files.createTempDirectory("upsert3").toString
+    val handler = ForeachBatchUpsert.handler(dir, "id", "version", buckets = 2)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    handler(Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("id", "version", "payload"), 0L)
+    handler(Seq((2L, 2L, "b2")).toDF("id", "version", "payload"), 1L)
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+    assert(pinned.isEmpty, s"${pinned.size} RDDs pinned by two upsert batches")
+  }
+
   test("dedupeLatest breaks (key, version) ties deterministically") {
     val batch = Seq((1L, 1L, "x"), (1L, 1L, "y")).toDF("id", "version", "payload")
     val out = ForeachBatchUpsert.dedupeLatest(batch, "id", "version")
